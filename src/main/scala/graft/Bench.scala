@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark harness. Prints ONE compact JSON line for the driver and
   * writes the complete per-query map to `bench_full.json`.
@@ -106,7 +107,9 @@ object Bench {
     }
     val line = head + sb.toString +
       s"""},"omitted":${results.size - failed.size - taken},"sf":"$sfDir"}"""
-    spark.stop()
+    // A failing shutdown must not cost the driver its result line.
+    try spark.stop()
+    catch { case NonFatal(e) => System.err.println(s"spark.stop() failed: $e") }
     println(line)
   }
 }

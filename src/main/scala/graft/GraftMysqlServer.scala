@@ -61,7 +61,8 @@ object GraftMysqlServer {
     CLIENT_LONG_PASSWORD | CLIENT_CONNECT_WITH_DB | CLIENT_PROTOCOL_41 |
       CLIENT_SECURE_CONNECTION | CLIENT_PLUGIN_AUTH
 
-  @volatile private var server: Option[ServerSocket] = None
+  // the listening socket and its accept loop
+  @volatile private var server: Option[(ServerSocket, Thread)] = None
   private val connIds = new java.util.concurrent.atomic.AtomicInteger(1)
 
   def started: Boolean = server.isDefined
@@ -74,7 +75,6 @@ object GraftMysqlServer {
       bindHost: String = "localhost"): Unit = synchronized {
     if (server.isDefined) return
     val ss = new ServerSocket(port, 50, java.net.InetAddress.getByName(bindHost))
-    server = Some(ss)
     val acceptor = new Thread(() => {
       try while (!ss.isClosed) {
         val sock = ss.accept()
@@ -85,12 +85,20 @@ object GraftMysqlServer {
       } catch { case _: java.io.IOException => () /* closed */ }
     }, "graft-mysql-acceptor")
     acceptor.setDaemon(true)
+    server = Some((ss, acceptor))
     acceptor.start()
   }
 
-  /** Stop accepting (test hygiene; live connections drain on close). */
+  /** Stop accepting (test hygiene; live connections drain on close).
+    * Returns once the port is free: a blocked accept() holds the
+    * listening socket open until it returns, so a restart on the same
+    * port right after close() could fail with BindException.
+    */
   def stop(): Unit = synchronized {
-    server.foreach(s => try s.close() catch { case _: Exception => () })
+    server.foreach { case (s, acceptor) =>
+      try s.close() catch { case _: Exception => () }
+      acceptor.join(5000L)
+    }
     server = None
   }
 

@@ -249,19 +249,14 @@ final class GraftTable(path: String, version: Option[Long],
       .orElse(LakeTable.currentVersion(spark, path))
       .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
     val commit = LakeTable.readCommit(spark, path, v)
-    // A snapshot carrying deletion vectors (B46 merge-on-read) serves
-    // through GraftDvScanBuilder: V1 filter pushdown + column pruning
-    // + sidecar-stats file skipping, vectors applied inside the
-    // relation's own columnar parquet subplan. `CALL system.compact`
-    // purges the vectors and puts the table back on the fully-V2
-    // columnar scan below.
-    // DV'd snapshots AND renamed tables serve through the V1-pushdown
-    // builder: both need per-group frame assembly (vector filters /
-    // physical→logical name mapping) that the raw columnar parquet
-    // scan below cannot express. Pushdown, pruning and stats survive
-    // (see GraftDvScanBuilder); compaction migrates groups to the
+    // A snapshot carrying deletion vectors (B46 merge-on-read) or a
+    // column-mapping chain (renames, drops, widenings) needs per-group
+    // frame assembly that the raw columnar parquet scan below cannot
+    // express, so it serves through GraftDvScanBuilder: the same
+    // pushdown, column pruning and stats file skipping over
+    // LakeTable.readSnapshot. Compaction migrates groups to the
     // current physical names and vector-free files, restoring the
-    // fully-V2 path.
+    // fully-V2 scan.
     if (LakeTable.dvFor(spark, path, v, commit.dirs).nonEmpty
         || LakeTable.tableMappings(spark, path).nonEmpty)
       return new GraftDvScanBuilder(spark, path, v,
@@ -282,17 +277,17 @@ final class GraftTable(path: String, version: Option[Long],
   }
 }
 
-/** Scan builder for DV'd snapshots (B46): the merge-on-read serving
-  * mode. The scan keeps the lakehouse fast-path behaviors even while
-  * vectors exist — it negotiates V1 filter pushdown and column
-  * pruning, mines the pushed conjuncts for bounds and SKIPS whole
-  * files via the min/max sidecar stats (plus partition-dir values),
-  * and builds its result as a DataFrame over only the surviving
-  * files: parquet row-group pushdown, vectorized read and whole-stage
-  * codegen all run INSIDE the relation, with the broadcast
-  * deletion-vector filter applied per (file, row_index). Only the
-  * relation boundary itself is row-based (V1Scan), and it carries
-  * just the filtered, projected rows.
+/** Scan builder for snapshots carrying deletion vectors (B46) or a
+  * column-mapping chain. It negotiates V1 filter pushdown and column
+  * pruning, mines the pushed conjuncts for bounds (LakeTable.predicateBounds)
+  * and SKIPS whole files via the min/max sidecar stats (plus
+  * partition-dir values), then builds its result with
+  * LakeTable.readSnapshot over only the surviving files: parquet
+  * row-group pushdown, vectorized read and whole-stage codegen all run
+  * INSIDE the relation, with the broadcast deletion-vector filter
+  * applied per (file, row_index) and the mapping chain giving logical
+  * names. Only the relation boundary itself is row-based (V1Scan), and
+  * it carries just the filtered, projected rows.
   *
   * Safety stance: every pushed filter is ALSO returned as a residual
   * (`pushFilters` returns its input), so Spark re-evaluates the
@@ -306,82 +301,34 @@ final class GraftDvScanBuilder(spark: SparkSession, path: String, v: Long,
     with org.apache.spark.sql.connector.read.SupportsPushDownFilters
     with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns {
 
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.functions.{col, lit, not}
-  import org.apache.spark.sql.sources._
+  import org.apache.spark.sql.functions.col
+  import org.apache.spark.sql.graftglue.Glue
+  import org.apache.spark.sql.sources.Filter
 
   private var pushed: Array[Filter] = Array.empty
   private var required: StructType = tableSchema
 
+  // Only filters with an exact Column equivalent are applied and
+  // advertised; the rest are left to Spark alone.
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(toColumn(_).isDefined)
+    pushed = filters.filter(f => GraftPredicates.toColumn(Glue.toV2(f)).isDefined)
     filters // all stay residual: the source's application is advisory
   }
   override def pushedFilters(): Array[Filter] = pushed
   override def pruneColumns(requiredSchema: StructType): Unit = { required = requiredSchema }
 
-  /** sources.Filter → Column, None for anything without an exact
-    * Column equivalent (those are neither applied nor advertised).
-    */
-  private def toColumn(f: Filter): Option[Column] = f match {
-    case EqualTo(a, value) => Some(col(a) === lit(value))
-    case EqualNullSafe(a, value) => Some(col(a) <=> lit(value))
-    case GreaterThan(a, value) => Some(col(a) > lit(value))
-    case GreaterThanOrEqual(a, value) => Some(col(a) >= lit(value))
-    case LessThan(a, value) => Some(col(a) < lit(value))
-    case LessThanOrEqual(a, value) => Some(col(a) <= lit(value))
-    case In(a, vs) => Some(col(a).isin(vs.toIndexedSeq: _*))
-    case IsNull(a) => Some(col(a).isNull)
-    case IsNotNull(a) => Some(col(a).isNotNull)
-    case StringStartsWith(a, value) => Some(col(a).startsWith(value))
-    case StringEndsWith(a, value) => Some(col(a).endsWith(value))
-    case StringContains(a, value) => Some(col(a).contains(value))
-    case And(l, r) => for (lc <- toColumn(l); rc <- toColumn(r)) yield lc && rc
-    case Or(l, r) => for (lc <- toColumn(l); rc <- toColumn(r)) yield lc || rc
-    case Not(c) => toColumn(c).map(not)
-    case _ => None
-  }
-
-  /** Inclusive per-column bounds from the pushed conjuncts (the
-    * top-level array is a conjunction), for sidecar-stats file
-    * skipping; unrecognized shapes contribute no bound (sound).
-    */
-  private def boundsOf(filters: Array[Filter]): Map[String, LakeTable.ColumnBounds] = {
-    val bounds = scala.collection.mutable.Map.empty[String, LakeTable.ColumnBounds]
-    def ok(value: Any): Option[Any] = value match {
-      case s: String => Some(s)
-      case n: Number => Some(n)
-      case _ => None
-    }
-    def tightenLo(c: String, value: Any): Unit = bounds.updateWith(c) {
-      case Some(b) if b.lo.isEmpty => Some(b.copy(lo = Some(value)))
-      case other => other.orElse(Some(LakeTable.ColumnBounds(Some(value), None)))
-    }
-    def tightenHi(c: String, value: Any): Unit = bounds.updateWith(c) {
-      case Some(b) if b.hi.isEmpty => Some(b.copy(hi = Some(value)))
-      case other => other.orElse(Some(LakeTable.ColumnBounds(None, Some(value))))
-    }
-    def walk(f: Filter): Unit = f match {
-      case And(l, r) => walk(l); walk(r)
-      case EqualTo(a, value) => ok(value).foreach { w => tightenLo(a, w); tightenHi(a, w) }
-      case GreaterThan(a, value) => ok(value).foreach(tightenLo(a, _))
-      case GreaterThanOrEqual(a, value) => ok(value).foreach(tightenLo(a, _))
-      case LessThan(a, value) => ok(value).foreach(tightenHi(a, _))
-      case LessThanOrEqual(a, value) => ok(value).foreach(tightenHi(a, _))
-      case _ => ()
-    }
-    filters.foreach(walk)
-    bounds.toMap
-  }
-
   override def build(): org.apache.spark.sql.connector.read.Scan = {
-    val commit = LakeTable.readCommit(spark, path, v)
-    val (pruned, flat) = LakeTable.pruneFilesByDir(spark, path, commit.dirs,
-      boundsOf(pushed))
+    val filterCol = pushed.flatMap(f => GraftPredicates.toColumn(Glue.toV2(f)))
+      .reduceOption(_ && _)
+    // bounds come from the filter analyzed over an empty frame of the
+    // table's schema: resolved columns, no snapshot read planned
+    val (pruned, _) = LakeTable.pruneFilesByDir(spark, path,
+      LakeTable.readCommit(spark, path, v).dirs,
+      filterCol.fold(Map.empty[String, LakeTable.ColumnBounds])(LakeTable.predicateBounds(
+        spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+          tableSchema), _)))
     val total = pruned.map(_.files.size).sum
     val kept = pruned.map(_.kept.size).sum
-    val dv = LakeTable.dvFor(spark, path, v, commit.dirs)
-    val filterCol = pushed.flatMap(toColumn(_)).reduceOption(_ && _)
     val reqCols = required.fieldNames.toIndexedSeq
     val reqSchema = required
     // Kept-file bytes were listed during pruning — the stats report is
@@ -434,7 +381,7 @@ final class GraftDvScanBuilder(spark: SparkSession, path: String, v: Long,
           override def sqlContext: org.apache.spark.sql.SQLContext = ctx
           override def schema: StructType = reqSchema
           override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-            val base = LakeTable.readPrunedDv(spark, path, pruned, flat, dv, tableSchema)
+            val base = LakeTable.readSnapshot(spark, path, v, Some(pruned))
             val filtered = filterCol.fold(base)(base.where)
             filtered.select(reqCols.map(col): _*).rdd
           }
@@ -447,14 +394,17 @@ final class GraftDvScanBuilder(spark: SparkSession, path: String, v: Long,
   }
 }
 
-/** V2 predicate → Column conversion shared by the delete/overwrite
-  * surfaces (canDeleteWhere/deleteWhere and the write builder).
+/** The one V2 predicate → Column conversion: the delete/overwrite
+  * surfaces (canDeleteWhere/deleteWhere and the write builder) and the
+  * DV scan's pushed filters (V1 filters via `Glue.toV2`). None for
+  * anything without an exact Column equivalent.
   */
 private[sources] object GraftPredicates {
   def toColumn(e: org.apache.spark.sql.connector.expressions.Expression)
       : Option[org.apache.spark.sql.Column] = {
     import org.apache.spark.sql.connector.expressions.{Literal => VLiteral, NamedReference}
     import org.apache.spark.sql.connector.expressions.filter.{And => VAnd, Not => VNot, Or => VOr, Predicate}
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.graftglue.Glue
     e match {
@@ -475,6 +425,9 @@ private[sources] object GraftPredicates {
           case "<=" => bin(_ <= _)
           case ">" => bin(_ > _)
           case ">=" => bin(_ >= _)
+          case "STARTS_WITH" => bin(_.startsWith(_))
+          case "ENDS_WITH" => bin(_.endsWith(_))
+          case "CONTAINS" => bin(_.contains(_))
           case _ => None
         }
       case p: Predicate if p.children().length == 1 =>
@@ -484,7 +437,7 @@ private[sources] object GraftPredicates {
           case _ => None
         }
       case f: NamedReference =>
-        Some(org.apache.spark.sql.functions.col(f.fieldNames().mkString(".")))
+        Some(Glue.column(UnresolvedAttribute(f.fieldNames().toSeq)))
       case l: VLiteral[_] => Some(Glue.column(Literal(l.value, l.dataType)))
       case _ => None
     }
@@ -529,8 +482,7 @@ final class GraftScanBuilder(spark: SparkSession, path: String, dirs: Seq[String
     extends org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
     with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns {
 
-  import org.apache.spark.sql.catalyst.expressions.{And => CAnd, AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal}
-  import org.apache.spark.unsafe.types.UTF8String
+  import org.apache.spark.sql.catalyst.expressions.{And => CAnd, Expression}
 
   private val partCols = LakeTable.tablePartitioning(spark, path)
 
@@ -566,46 +518,9 @@ final class GraftScanBuilder(spark: SparkSession, path: String, dirs: Seq[String
     probe.pruneColumns(requiredSchema)
   }
 
-  /** Mine inclusive per-column bounds from conjunctive comparisons;
-    * anything unrecognized simply contributes no bound (sound).
-    */
-  private def boundsOf(filters: Seq[Expression]): Map[String, LakeTable.ColumnBounds] = {
-    def valueOf(l: Literal): Option[Any] = l.value match {
-      case s: UTF8String => Some(s.toString)
-      case n: Number => Some(n)
-      case _ => None
-    }
-    val bounds = scala.collection.mutable.Map.empty[String, LakeTable.ColumnBounds]
-    def tightenLo(c: String, v: Any): Unit = bounds.updateWith(c) {
-      case Some(b) if b.lo.isEmpty => Some(b.copy(lo = Some(v)))
-      case other => other.orElse(Some(LakeTable.ColumnBounds(Some(v), None)))
-    }
-    def tightenHi(c: String, v: Any): Unit = bounds.updateWith(c) {
-      case Some(b) if b.hi.isEmpty => Some(b.copy(hi = Some(v)))
-      case other => other.orElse(Some(LakeTable.ColumnBounds(None, Some(v))))
-    }
-    def walk(e: Expression): Unit = e match {
-      case CAnd(l, r) => walk(l); walk(r)
-      case EqualTo(a: AttributeReference, l: Literal) =>
-        valueOf(l).foreach { v => tightenLo(a.name, v); tightenHi(a.name, v) }
-      case EqualTo(l: Literal, a: AttributeReference) =>
-        valueOf(l).foreach { v => tightenLo(a.name, v); tightenHi(a.name, v) }
-      case GreaterThan(a: AttributeReference, l: Literal) => valueOf(l).foreach(tightenLo(a.name, _))
-      case GreaterThanOrEqual(a: AttributeReference, l: Literal) => valueOf(l).foreach(tightenLo(a.name, _))
-      case LessThan(a: AttributeReference, l: Literal) => valueOf(l).foreach(tightenHi(a.name, _))
-      case LessThanOrEqual(a: AttributeReference, l: Literal) => valueOf(l).foreach(tightenHi(a.name, _))
-      case LessThan(l: Literal, a: AttributeReference) => valueOf(l).foreach(tightenLo(a.name, _))
-      case LessThanOrEqual(l: Literal, a: AttributeReference) => valueOf(l).foreach(tightenLo(a.name, _))
-      case GreaterThan(l: Literal, a: AttributeReference) => valueOf(l).foreach(tightenHi(a.name, _))
-      case GreaterThanOrEqual(l: Literal, a: AttributeReference) => valueOf(l).foreach(tightenHi(a.name, _))
-      case _ => ()
-    }
-    filters.foreach(walk)
-    bounds.toMap
-  }
-
   override def build(): org.apache.spark.sql.connector.read.Scan = {
-    val bounds = boundsOf(pushed)
+    val bounds = pushed.reduceOption(CAnd).fold(Map.empty[String, LakeTable.ColumnBounds])(
+      LakeTable.boundsOf)
     val all = dirs.map(d => new Path(path, d).toString)
     val paths =
       if (bounds.isEmpty) all

@@ -1002,46 +1002,20 @@ object LakeTable {
     if (flat) Some(pruned.flatMap(_.kept)) else None
   }
 
-  /** Read the surviving files of a prune: flat layouts as one file
-    * list, partition-encoded layouts per dir under its `basePath` so
-    * the partition columns are recovered from the paths.
-    */
-  private def readPruned(spark: SparkSession, path: String, pruned: Seq[PrunedDir],
-      flat: Boolean, version: Option[Long]): DataFrame = {
-    val nonEmpty = pruned.filter(_.kept.nonEmpty)
-    if (nonEmpty.isEmpty) read(spark, path, version).limit(0)
-    else if (flat)
-      spark.read.option("mergeSchema", "true").parquet(nonEmpty.flatMap(_.kept): _*)
-    else nonEmpty.map { pd =>
-      spark.read.option("mergeSchema", "true").option("basePath", pd.base)
-        .parquet(pd.kept: _*)
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
-  }
-
   /** File-skipping range read: keep only the files of the snapshot
     * whose `[min,max]` for `column` intersects `[lo, hi]` (both
-    * inclusive; pass lo==hi for a point lookup); the residual
-    * predicate is applied on top, so the result is exactly
-    * `read(...).where(column between lo and hi)` at a fraction of the
-    * files opened.
+    * inclusive); the residual predicate is applied on top, so the
+    * result is exactly `read(...).where(column between lo and hi)` at
+    * a fraction of the files opened.
     */
   def readRange(spark: SparkSession, path: String, column: String,
       lo: Any, hi: Any, version: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
     val v = version.orElse(currentVersion(spark, path))
       .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
-    val c = readCommit(spark, path, v)
-    val (pruned, flat) = pruneFilesByDir(spark, path, c.dirs,
+    val (pruned, _) = pruneFilesByDir(spark, path, readCommit(spark, path, v).dirs,
       Map(column -> ColumnBounds(Some(lo), Some(hi))))
-    // A DV'd snapshot (B46) keeps the same file skipping — vectors key
-    // by (file, row) so pruning whole files is sound — with the
-    // vector filter applied on the surviving files.
-    val dv = dvFor(spark, path, v, c.dirs)
-    val base =
-      if (dv.nonEmpty) readPrunedDv(spark, path, pruned, flat, dv,
-        tableSchema(spark, path, Some(v)))
-      else readPruned(spark, path, pruned, flat, Some(v))
-    base.where(col(column) >= lit(lo) && col(column) <= lit(hi))
+    readSnapshot(spark, path, v, Some(pruned))
+      .where(col(column) >= lit(lo) && col(column) <= lit(hi))
   }
 
   // ---- per-file bloom sidecars (point lookups on UNCLUSTERED columns) --
@@ -1141,35 +1115,40 @@ object LakeTable {
       version: Option[Long] = None): DataFrame = {
     val v = version.orElse(currentVersion(spark, path))
       .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
-    val base = pointCandidateFiles(spark, path, column, value, Some(v)) match {
-      case Some(files) if files.isEmpty => read(spark, path, Some(v)).limit(0)
-      case Some(files) => spark.read.option("mergeSchema", "true").parquet(files: _*)
-      case None =>
-        // Partition-encoded layout: no bloom tier, but stats +
-        // partition-value pruning still apply (basePath read keeps
-        // the partition columns).
-        val c = readCommit(spark, path, v)
-        val (pruned, flat) = pruneFilesByDir(spark, path, c.dirs,
-          Map(column -> ColumnBounds(Some(value), Some(value))))
-        readPruned(spark, path, pruned, flat, Some(v))
-    }
-    base.where(col(column) === lit(value))
+    readSnapshot(spark, path, v, Some(pointSelection(spark, path, v, column, value)._1))
+      .where(col(column) === lit(value))
   }
 
   /** Files a point lookup must open: footer-stats prune, then bloom
     * "definitely absent" per surviving file. None = partitioned layout
-    * (file-level pruning unsafe). Also used by specs to assert skipping.
+    * (a bare file list would lose the partition columns). Used by specs
+    * to assert skipping.
     */
   private[graft] def pointCandidateFiles(spark: SparkSession, path: String,
       column: String, value: Any, version: Option[Long] = None): Option[Seq[String]] = {
+    val (pruned, flat) = pointSelection(spark, path,
+      version.orElse(currentVersion(spark, path)).get, column, value)
+    if (flat) Some(pruned.flatMap(_.kept)) else None
+  }
+
+  /** [[pruneFilesByDir]] for `column = value` over snapshot `v`, with
+    * each surviving file also dropped when the bloom sidecar of its
+    * commit entry says the value is definitely absent. A file whose
+    * path holds a `column=` dir skips the bloom: the partition value
+    * already decided it exactly, and the bloom was built from the
+    * value's INFERRED type (a STRING "1" stored as a long).
+    */
+  private def pointSelection(spark: SparkSession, path: String, v: Long,
+      column: String, value: Any): (Seq[PrunedDir], Boolean) = {
     import org.apache.spark.util.sketch.BloomFilter
-    val v = version.orElse(currentVersion(spark, path)).get
-    val c = readCommit(spark, path, v)
-    // cache per-dir sidecar parses: (dir -> (rel, column) -> bloom b64)
-    val sidecars = scala.collection.mutable.Map.empty[String, Map[(String, String), String]]
-    def sidecarOf(dirPath: Path, fs: FileSystem): Map[(String, String), String] =
-      sidecars.getOrElseUpdate(dirPath.toString, {
-        val bloomPath = new Path(dirPath, BloomFile)
+    val (pruned, flat) = pruneFilesByDir(spark, path, readCommit(spark, path, v).dirs,
+      Map(column -> ColumnBounds(Some(value), Some(value))))
+    val narrowed = pruned.map { pd =>
+      val dirPath = new Path(path, pd.dir)
+      val fs = fsOf(spark, dirPath)
+      val bloomPath = new Path(dirPath, BloomFile)
+      // (rel under the entry dir, column) -> bloom b64
+      lazy val sidecar: Map[(String, String), String] =
         if (!fs.exists(bloomPath)) Map.empty
         else {
           val in = fs.open(bloomPath)
@@ -1177,28 +1156,26 @@ object LakeTable {
           body.split("\n").filter(_.nonEmpty).map(_.split("\t"))
             .collect { case Array(r, cn, b64) => (dec(r), dec(cn)) -> b64 }.toMap
         }
-      })
-    pruneFiles(spark, path, c.dirs, Map(column -> ColumnBounds(Some(value), Some(value))))
-      .map { files =>
-        files.filter { f =>
-          val fp = new Path(f)
-          val fs = fsOf(spark, fp.getParent)
-          val base = fs.makeQualified(fp.getParent).toString
-          val rel = fs.makeQualified(fp).toString.stripPrefix(base + "/")
-          sidecarOf(fp.getParent, fs).get((rel, column)) match {
-            case None => true // no bloom: must read the file
-            case Some(b64) =>
-              val bf = BloomFilter.readFrom(new java.io.ByteArrayInputStream(
-                java.util.Base64.getDecoder.decode(b64)))
-              value match {
-                case l: java.lang.Long => bf.mightContainLong(l)
-                case n: java.lang.Integer => bf.mightContainLong(n.longValue())
-                case s: String => bf.mightContainString(s)
-                case other => bf.mightContainString(other.toString)
-              }
-          }
+      lazy val base = fs.makeQualified(dirPath).toString
+      pd.copy(files = pd.files.map { f =>
+        lazy val rel = fs.makeQualified(new Path(f.file)).toString.stripPrefix(base + "/")
+        if (!f.kept || rel.split('/').init.exists(_.toLowerCase.startsWith(
+            column.toLowerCase + "="))) f
+        else sidecar.get((rel, column)) match {
+          case None => f // no bloom: must read the file
+          case Some(b64) =>
+            val bf = BloomFilter.readFrom(new java.io.ByteArrayInputStream(
+              java.util.Base64.getDecoder.decode(b64)))
+            f.copy(kept = value match {
+              case l: java.lang.Long => bf.mightContainLong(l)
+              case n: java.lang.Integer => bf.mightContainLong(n.longValue())
+              case s: String => bf.mightContainString(s)
+              case other => bf.mightContainString(other.toString)
+            })
         }
-      }
+      })
+    }
+    (narrowed, flat)
   }
 
   /** Append-driven STREAMING read of the table (the Delta
@@ -2605,12 +2582,37 @@ object LakeTable {
     * merge-on-read) are applied; rewritten groups shed theirs by dir
     * rename, older snapshots read pre-delete state by version.
     */
-  def read(spark: SparkSession, path: String, version: Option[Long] = None): DataFrame = {
-    val v = version.orElse(currentVersion(spark, path))
-      .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
-    val c = readCommit(spark, path, v)
-    readDirsDv(spark, path, c.dirs, dvFor(spark, path, v, c.dirs), withPos = false)
-  }
+  def read(spark: SparkSession, path: String, version: Option[Long] = None): DataFrame =
+    readSnapshot(spark, path, version.orElse(currentVersion(spark, path))
+      .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path")))
+
+  /** The live logical rows of snapshot `v` — the one read behind
+    * [[read]], [[readRange]], [[readPoint]] and the catalog's
+    * vector/mapping scan. `pruned` selects files: None reads every file
+    * of the snapshot, Some(outcome of [[pruneFilesByDir]], possibly
+    * narrowed further by blooms) reads only the kept ones. The
+    * snapshot's deletion vectors and the column-mapping chain apply
+    * either way; pruning under vectors is sound because they key by
+    * (file, row), so skipping a whole file skips its marks with it. An
+    * empty selection is an empty frame typed by the table schema.
+    */
+  private[graft] def readSnapshot(spark: SparkSession, path: String, v: Long,
+      pruned: Option[Seq[PrunedDir]] = None): DataFrame =
+    if (pruned.exists(_.forall(_.kept.isEmpty)))
+      spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        tableSchema(spark, path, Some(v)))
+    else {
+      val sel = pruned.fold[Selection](Left(readCommit(spark, path, v).dirs))(p =>
+        Right(p.filter(_.kept.nonEmpty)))
+      readDirsDv(spark, path, sel, dvFor(spark, path, v, entriesOf(sel)), withPos = false)
+    }
+
+  /** The files a read scans: whole commit entries (Left), or per entry
+    * only the files a prune kept (Right).
+    */
+  private type Selection = Either[Seq[String], Seq[PrunedDir]]
+
+  private def entriesOf(sel: Selection): Seq[String] = sel.fold(identity, _.map(_.dir))
 
   // ---- deletion vectors (merge-on-read DELETE, B46) -----------------
 
@@ -2727,7 +2729,7 @@ object LakeTable {
     val v = prev + 1
     val c = readCommit(spark, path, prev)
     val dv0 = dvFor(spark, path, prev, c.dirs)
-    val live = readDirsDv(spark, path, c.dirs, dv0, withPos = true)
+    val live = readDirsDv(spark, path, Left(c.dirs), dv0, withPos = true)
     if (!live.columns.contains("__file")) { // empty DDL table: no files
       writeCommit(spark, path, Commit(v, "delete-mor", c.dirs))
       return v
@@ -2902,7 +2904,7 @@ object LakeTable {
     val v = prev + 1
     val c = readCommit(spark, path, prev)
     val dv0 = dvFor(spark, path, prev, c.dirs)
-    val live = readDirsDv(spark, path, c.dirs, dv0, withPos = true)
+    val live = readDirsDv(spark, path, Left(c.dirs), dv0, withPos = true)
     if (!live.columns.contains("__file")) {
       writeCommit(spark, path, Commit(v, "update-mor", c.dirs))
       return v
@@ -3209,28 +3211,56 @@ object LakeTable {
     }.toMap
   }
 
-  /** Conservative bounds from a DELETE/UPDATE predicate: top-level AND
-    * of {=, <, <=, >, >=, IN, BETWEEN-ish} comparisons between a column
-    * and literals, read from the ANALYZED filter over the snapshot (so
-    * Spark's own resolution and implicit casts are honored). Any
-    * conjunct we cannot read contributes nothing; an OR (or any other
-    * root) yields no bounds → full rewrite. A column reached through a
-    * cast counts only when the cast is a loss-free up-cast (order
-    * preserving — a truncating cast could prune a file that matches).
+  /** Conservative bounds from a predicate, read from the ANALYZED
+    * filter over `base` (so Spark's own resolution and implicit casts
+    * are honored); see [[boundsOf]].
     */
-  private def predicateBounds(base: DataFrame,
-      predicate: org.apache.spark.sql.Column): Map[String, ColumnBounds] = {
+  private[graft] def predicateBounds(base: DataFrame,
+      predicate: org.apache.spark.sql.Column): Map[String, ColumnBounds] =
+    base.where(predicate).queryExecution.analyzed.collectFirst {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => boundsOf(f.condition)
+    }.getOrElse(Map.empty)
+
+  /** Exact order of bound numbers: no Double detour, which merges
+    * distinct longs above 2^53.
+    */
+  private val numberOrder: Ordering[Number] = (a, b) => cmpStatToNumber(a.toString, b)
+
+  /** Order of two bound values of the same kind; None across kinds. */
+  private def boundCmp(a: Any, b: Any): Option[Int] = (a, b) match {
+    case (p: Number, q: Number) => Some(numberOrder.compare(p, q))
+    case (p: String, q: String) => Some(p.compareTo(q))
+    case _ => None
+  }
+
+  /** The one bounds miner: conservative per-column inclusive bounds
+    * from a filter condition — ANDs of {=, <=>, <, <=, >, >=, IN}
+    * comparisons between a column and literals, ORs as the envelope of
+    * their branches. Used by DML group pruning and by both catalog
+    * scan builders. Any conjunct it cannot read contributes nothing
+    * (sound: skipping is an optimization, never a filter). A column
+    * reached through a cast counts only when the cast is an EXACT
+    * numeric widening: the bound must be in the unit and order of the
+    * column's footer stats. A rounding cast (long→double, int→float)
+    * could prune a file that matches, and so could timestamp↔long
+    * (seconds against microseconds), date→timestamp (microseconds
+    * against days), NTZ↔LTZ (shifted by the session zone) or any cast
+    * to string (lexical against numeric order), all of which Spark
+    * calls up-casts.
+    */
+  private[graft] def boundsOf(
+      cond: org.apache.spark.sql.catalyst.expressions.Expression): Map[String, ColumnBounds] = {
     import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter}
-    import org.apache.spark.sql.types.StringType
-    val condOpt = base.where(predicate).queryExecution.analyzed.collectFirst {
-      case f: LFilter => f.condition
-    }
-    if (condOpt.isEmpty) return Map.empty
+    import org.apache.spark.sql.types._
     def nameOf(e: Expression): Option[String] = e match {
       case a: AttributeReference => Some(a.name)
-      case c: Cast if Cast.canUpCast(c.child.dataType, c.dataType) => nameOf(c.child)
+      case c: Cast if exact(c.child.dataType, c.dataType) => nameOf(c.child)
       case _ => None
+    }
+    def exact(from: DataType, to: DataType): Boolean = (from, to) match {
+      case (LongType, FloatType | DoubleType) | (IntegerType, FloatType) => false
+      case (_: NumericType, _: NumericType) => Cast.canUpCast(from, to)
+      case _ => false
     }
     def valueOf(e: Expression): Option[Any] =
       if (!e.foldable) None
@@ -3260,9 +3290,9 @@ object LakeTable {
         val lits = vs.flatMap(valueOf)
         if (lits.size != vs.size || lits.isEmpty) None
         else nameOf(a).map { n =>
-          val nums = lits.collect { case x: Number => x.doubleValue() }
+          val nums = lits.collect { case x: Number => x }
           if (nums.size == lits.size)
-            n -> ColumnBounds(Some(Double.box(nums.min)), Some(Double.box(nums.max)))
+            n -> ColumnBounds(Some(nums.min(numberOrder)), Some(nums.max(numberOrder)))
           else {
             val ss = lits.map(_.toString)
             n -> ColumnBounds(Some(ss.min), Some(ss.max))
@@ -3270,17 +3300,19 @@ object LakeTable {
         }
       case _ => None
     }
+    // Pick the larger (wantMax) or smaller of two bound sides; None when
+    // they are not comparable.
+    def pick(x: Any, y: Any, wantMax: Boolean): Option[Any] =
+      boundCmp(x, y).map(c => if ((c > 0) == wantMax) x else y)
     // Conjunction: using any one conjunct's bounds is a SUPERSET of the
     // true matching range — safe; intersecting tightens it.
     def tighter(a: ColumnBounds, b: ColumnBounds): ColumnBounds = {
-      def pick(x: Option[Any], y: Option[Any], wantMax: Boolean) = (x, y) match {
-        case (Some(p: Number), Some(q: Number)) =>
-          if ((p.doubleValue > q.doubleValue) == wantMax) x else y
-        case (Some(p: String), Some(q: String)) => if ((p > q) == wantMax) x else y
+      def side(x: Option[Any], y: Option[Any], wantMax: Boolean) = (x, y) match {
+        case (Some(p), Some(q)) => pick(p, q, wantMax).orElse(x)
         case (Some(_), _) => x
         case (None, o) => o
       }
-      ColumnBounds(pick(a.lo, b.lo, wantMax = true), pick(a.hi, b.hi, wantMax = false))
+      ColumnBounds(side(a.lo, b.lo, wantMax = true), side(a.hi, b.hi, wantMax = false))
     }
     // Disjunction: the sound ENVELOPE — a column bounded on BOTH
     // branches keeps the wider [min(lo), max(hi)]; bounded on one
@@ -3288,13 +3320,9 @@ object LakeTable {
     // This is what makes an OR-of-partition-tuples predicate (dynamic
     // partition overwrite, IN-tuple deletes) still prune.
     def wider(a: ColumnBounds, b: ColumnBounds): ColumnBounds = {
-      def pick(x: Option[Any], y: Option[Any], wantMax: Boolean): Option[Any] = (x, y) match {
-        case (Some(p: Number), Some(q: Number)) =>
-          if ((p.doubleValue > q.doubleValue) == wantMax) x else y
-        case (Some(p: String), Some(q: String)) => if ((p > q) == wantMax) x else y
-        case _ => None
-      }
-      ColumnBounds(pick(a.lo, b.lo, wantMax = false), pick(a.hi, b.hi, wantMax = true))
+      def side(x: Option[Any], y: Option[Any], wantMax: Boolean): Option[Any] =
+        for (p <- x; q <- y; w <- pick(p, q, wantMax)) yield w
+      ColumnBounds(side(a.lo, b.lo, wantMax = false), side(a.hi, b.hi, wantMax = true))
     }
     def walk(e: Expression): Map[String, ColumnBounds] = e match {
       case And(l, r) =>
@@ -3312,7 +3340,7 @@ object LakeTable {
           .filter { case (_, b) => b.lo.nonEmpty || b.hi.nonEmpty }.toMap
       case other => boundOf(other).toMap
     }
-    walk(condOpt.get)
+    walk(cond)
   }
 
   /** Snapshot-subset read. Partitioned layouts with MULTIPLE groups
@@ -3324,7 +3352,7 @@ object LakeTable {
     * (a schema-only create) contribute nothing.
     */
   private def readDirs(spark: SparkSession, path: String, dirs: Seq[String]): DataFrame =
-    readDirsDv(spark, path, dirs, Map.empty, withPos = false)
+    readDirsDv(spark, path, Left(dirs), Map.empty, withPos = false)
 
   /** Touched-group read with the snapshot's deletion vectors applied.
     * EVERY copy-on-write rewrite source must read LIVE rows — a plain
@@ -3332,17 +3360,19 @@ object LakeTable {
     */
   private def readDirsLive(spark: SparkSession, path: String, dirs: Seq[String],
       version: Long): DataFrame =
-    readDirsDv(spark, path, dirs, dvFor(spark, path, version, dirs), withPos = false)
+    readDirsDv(spark, path, Left(dirs), dvFor(spark, path, version, dirs), withPos = false)
 
-  /** [[readDirs]] with deletion-vector application (B46) and optional
-    * file/row-position columns. DVs and positions both ride on the
-    * parquet `_metadata` struct, which only exists per SCAN — so the
-    * select happens on each source frame BEFORE any union. `dv` maps
-    * group root → (file_path → bitmap blob); frames whose groups carry
-    * no DV skip the metadata projection entirely (zero overhead for
-    * the common non-MOR table).
+  /** [[readDirs]] with deletion-vector application (B46), the
+    * column-mapping chain and optional file/row-position columns.
+    * DVs and positions both ride on the parquet `_metadata` struct,
+    * which only exists per SCAN — so the select happens on each source
+    * frame BEFORE any union. `dv` maps group root → (file_path →
+    * bitmap blob); frames whose groups carry no DV skip the metadata
+    * projection entirely (zero overhead for the common non-MOR table).
+    * `sel` names whole entries or, per entry, the files a prune kept
+    * (see [[readSnapshot]]).
     */
-  private def readDirsDv(spark: SparkSession, path: String, dirs: Seq[String],
+  private def readDirsDv(spark: SparkSession, path: String, sel: Selection,
       dv: Map[String, Map[String, Array[Byte]]], withPos: Boolean): DataFrame = {
     // ONE broadcast of the full vector set per read plan (executors
     // fetch it once); every DV'd frame filter references the same
@@ -3364,8 +3394,14 @@ object LakeTable {
         if (withPos) filtered else filtered.drop("__file", "__pos")
       }
     }
+    val live = entriesOf(sel)
+    // entry -> files to scan; None = scan each entry dir whole
+    val kept = sel.toOption.map(_.map(pd => pd.dir -> pd.kept).toMap)
     val mappings = tableMappings(spark, path)
-    val flatEntries = dirs.forall(d => groupRoot(d) == d)
+    // Kept files read as a bare list, so they must sit directly in
+    // their entry dir (a partition subdir would lose its columns).
+    val flatEntries = live.forall(d => groupRoot(d) == d) &&
+      sel.forall(_.forall(pd => pd.files.forall(_.leaf == pd.dir)))
     // Footer merge across groups fails hard on PHYSICAL type skew (a
     // pre-normalization group stored INT where later ones hold
     // BIGINT); the per-root union coerces instead (unionByName widens
@@ -3380,36 +3416,36 @@ object LakeTable {
       // Single-scan fast path: a table with data at rename time is
       // marked mixed and routed below, so any chain here predates
       // every dir — the min version stands in for all of them.
+      val scan = kept.fold(live.map(d => new Path(path, d).toString))(k => live.flatMap(k))
       try finish(applyMappings(spark.read.option("mergeSchema", "true")
-        .parquet(dirs.map(d => new Path(path, d).toString): _*), mappings,
-        dirs.map(groupVersionOf).min),
-        dirs.map(groupKey))
+        .parquet(scan: _*), mappings, live.map(groupVersionOf).min),
+        live.map(groupKey))
       catch { case e: Throwable if mergeConflict(e) =>
-        readDirsUnion(spark, path, dirs, mappings, finish) }
+        readDirsUnion(spark, path, live, kept, mappings, finish) }
     } else {
-      // Partitioned (or subdir-entry) layout. CLEAN snapshots (no
-      // deletion vectors, no mapping chain, no position columns) read
-      // as ONE explicit-PartitionSpec scan spanning every group — the
-      // same single-relation shape the catalog SQL path serves — so
-      // the plan does NOT grow with the number of appends between
-      // compactions (one scan node and ONE footer-merge inference job
-      // at 200 commits, where the per-root union below pays both per
-      // group root). Partition column types come from the meta-recorded
-      // schema (authoritative — the catalog path's source), never
-      // re-inferred from path strings.
+      // Partitioned (or subdir-entry) layout. CLEAN whole snapshots (no
+      // deletion vectors, no mapping chain, no position columns, no
+      // file selection) read as ONE explicit-PartitionSpec scan
+      // spanning every group — the same single-relation shape the
+      // catalog SQL path serves — so the plan does NOT grow with the
+      // number of appends between compactions (one scan node and ONE
+      // footer-merge inference job at 200 commits, where the per-root
+      // union below pays both per group root). Partition column types
+      // come from the meta-recorded schema (authoritative — the catalog
+      // path's source), never re-inferred from path strings.
       val partCols = tablePartitioning(spark, path)
-      if (dv.isEmpty && !withPos && mappings.isEmpty && partCols.nonEmpty) {
+      if (dv.isEmpty && !withPos && mappings.isEmpty && kept.isEmpty && partCols.nonEmpty) {
         val meta = metaSchema(spark, path)
         if (meta.exists(m => partCols.forall(m.fieldNames.contains))) {
           val m = meta.get
           val leaves = partitionLeaves(spark,
-            dirs.map(d => new Path(path, d).toString), partCols)
+            live.map(d => new Path(path, d).toString), partCols)
           val partSchema = org.apache.spark.sql.types.StructType(partCols.map(c => m(c)))
           // The footer-merged schema is immutable per (path, dir set,
           // metaVer) — cache it so repeated reads of the same snapshot
           // skip the inference job entirely.
           val key = (fsOf(spark, new Path(path)).makeQualified(new Path(path)).toString
-            + FileSchemaKeySep + dirs.sorted.mkString(","), -1L, currentMetaVer(spark, path))
+            + FileSchemaKeySep + live.sorted.mkString(","), -1L, currentMetaVer(spark, path))
           val hint = Option(fileSchemaCache.get(key))
           try org.apache.spark.sql.graftglue.Glue
             .partitionedParquetDataFrame(spark, leaves, partSchema, hint) match {
@@ -3421,28 +3457,30 @@ object LakeTable {
           catch { case e: Throwable if mergeConflict(e) => () } // union coerces
         }
       }
-      readDirsUnion(spark, path, dirs, mappings, finish)
+      readDirsUnion(spark, path, live, kept, mappings, finish)
     }
   }
 
   /** Per-group-root union read: needed when rename mappings apply PER
     * ROOT (each group carries the physical names of its write time —
     * the union lines logical columns up by name), when DVs / position
-    * columns ride the per-scan `_metadata` struct, when no meta schema
-    * records the partition column types, or as the type-coercing
-    * fallback for physically type-skewed legacy groups. Plan size here
-    * is the ROOT count; compaction collapses it to one.
+    * columns ride the per-scan `_metadata` struct, when a file
+    * selection or no meta schema rules out the single partitioned
+    * scan, or as the type-coercing fallback for physically type-skewed
+    * legacy groups. Plan size here is the ROOT count; compaction
+    * collapses it to one.
     */
   private def readDirsUnion(spark: SparkSession, path: String, dirs: Seq[String],
-      mappings: Seq[MapRec], finish: (DataFrame, Seq[String]) => DataFrame): DataFrame = {
+      kept: Option[Map[String, Seq[String]]], mappings: Seq[MapRec],
+      finish: (DataFrame, Seq[String]) => DataFrame): DataFrame = {
     val byRoot = dirs.groupBy(groupRoot).toSeq.sortBy(_._1)
     val reads = byRoot.flatMap { case (root, entries) =>
-      val entryPaths = entries.map(e => new Path(path, e).toString)
-        .filter(p => hasParquet(spark, new Path(p)))
-      if (entryPaths.isEmpty) None
+      val scan = kept.fold(entries.map(e => new Path(path, e).toString)
+        .filter(p => hasParquet(spark, new Path(p))))(k => entries.flatMap(k))
+      if (scan.isEmpty) None
       else Some(finish(applyMappings(spark.read.option("mergeSchema", "true")
         .option("basePath", new Path(path, root).toString)
-        .parquet(entryPaths: _*), mappings, groupVersionOf(root)),
+        .parquet(scan: _*), mappings, groupVersionOf(root)),
         Seq(groupKey(root))))
     }
     if (reads.nonEmpty) reads.reduce(_.unionByName(_, allowMissingColumns = true))
@@ -3456,43 +3494,6 @@ object LakeTable {
       case None => spark.read.option("mergeSchema", "true")
         .parquet(dirs.map(d => new Path(path, d).toString): _*)
     }
-  }
-
-  /** DV-applying read over a PRUNED file subset — the merge-on-read
-    * catalog-SQL serving path (B46): the same broadcast-vector filter
-    * as [[readDirsDv]], over only the files that survived
-    * stats/partition pruning. Sound because vectors key by
-    * (file_path, row_index): dropping a whole file drops its marks
-    * with it, and marks never make a row MATCH a predicate.
-    */
-  private[graft] def readPrunedDv(spark: SparkSession, path: String,
-      pruned: Seq[PrunedDir], flat: Boolean,
-      dv: Map[String, Map[String, Array[Byte]]],
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    lazy val dvBc = spark.sparkContext.broadcast(dv.values.flatten.toMap)
-    def finish(df: DataFrame, groups: Seq[String]): DataFrame = {
-      val hasDv = groups.exists(g => dv.get(g).exists(_.nonEmpty))
-      if (!hasDv) df
-      else df
-        .withColumn("__file", col("_metadata.file_path"))
-        .withColumn("__pos", col("_metadata.row_index"))
-        .where(!org.apache.spark.sql.graftglue.Glue.column(
-          graft.plans.DvDeleted(
-            org.apache.spark.sql.graftglue.Glue.expression(col("__file")),
-            org.apache.spark.sql.graftglue.Glue.expression(col("__pos")), dvBc)))
-        .drop("__file", "__pos")
-    }
-    val mappings = tableMappings(spark, path)
-    val nonEmpty = pruned.filter(_.kept.nonEmpty)
-    if (nonEmpty.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else if (flat && mappings.isEmpty)
-      finish(spark.read.option("mergeSchema", "true")
-        .parquet(nonEmpty.flatMap(_.kept): _*), nonEmpty.map(p => groupKey(p.dir)))
-    else nonEmpty.map { pd =>
-      finish(applyMappings(spark.read.option("mergeSchema", "true").option("basePath", pd.base)
-        .parquet(pd.kept: _*), mappings, groupVersionOf(pd.dir)), Seq(groupKey(pd.dir)))
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
   /** MERGE INTO (copy-on-write upsert): rows of `source` replace
@@ -3637,7 +3638,7 @@ object LakeTable {
           .withColumn("__pos", lit(null).cast("long"))
         else base
       }
-      else if (dvMode) readDirsDv(spark, path, touched, dv0, withPos = true)
+      else if (dvMode) readDirsDv(spark, path, Left(touched), dv0, withPos = true)
       else readDirsLive(spark, path, touched, prev)
     // Pin the full evolved schema (touched groups may predate an added
     // column) and add presence markers for the full-outer categories.

@@ -24,10 +24,6 @@ object EventPipeline {
 
   final case class UserAgg(user_id: Long, cnt: Long, sum_val: Double)
 
-  /** Streaming view of the events table. File stream sources need an
-    * explicit schema; events.ts is parquet TIMESTAMP(NANOS), read as
-    * long (SPARK-40819) and rescaled, mirroring graft.Tables.
-    */
   /** Resolve the stream-source path IN PLACE. The source may be a
     * single parquet FILE (driver-generated testdata) or a Spark-written
     * DIRECTORY of part files (the sf1 scale corpus, any production
@@ -35,23 +31,28 @@ object EventPipeline {
     * inside — file stream sources do not recurse, but need not); a
     * single file streams through a `{name}` glob so the source's
     * basePath (the parent) is the directory the file-stream source
-    * requires. Earlier rounds COPIED the source into a scratch landing
-    * dir first — a driver-side, single-threaded byte copy charged to
-    * every stream row, and a non-starter at 100 TB where the landing
-    * dir must be read in place. Also records the source's size in
-    * `spark.graft.stream.inputBytes` so [[withStreamPartitions]] can
-    * size state partitions to the stream's actual volume.
+    * requires, with glob metacharacters in the path escaped so the
+    * pattern matches exactly that file. Earlier rounds COPIED the
+    * source into a scratch landing dir first — a driver-side,
+    * single-threaded byte copy charged to every stream row, and a
+    * non-starter at 100 TB where the landing dir must be read in place.
     */
-  private def streamSource(spark: SparkSession, src: org.apache.hadoop.fs.Path): String = {
+  private[graft] def streamSource(spark: SparkSession, src: org.apache.hadoop.fs.Path): String = {
     val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(src)
-    val (path, bytes) =
-      if (st.isDirectory) (src.toString, fs.getContentSummary(src).getLength)
-      else (s"${src.getParent}/{${src.getName}}", st.getLen)
-    spark.conf.set("spark.graft.stream.inputBytes", bytes.toString)
-    path
+    if (fs.getFileStatus(src).isDirectory) src.toString
+    else s"${globEscape(src.getParent.toString)}/{${globEscape(src.getName)}}"
   }
 
+  /** `s` with Hadoop glob metacharacters backslash-escaped. */
+  private def globEscape(s: String): String = s.flatMap {
+    case c @ ('\\' | '{' | '}' | '[' | ']' | '*' | '?' | ',') => s"\\$c"
+    case c => c.toString
+  }
+
+  /** Streaming view of the events table. File stream sources need an
+    * explicit schema; events.ts is parquet TIMESTAMP(NANOS), read as
+    * long (SPARK-40819) and rescaled, mirroring graft.Tables.
+    */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val src = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
@@ -81,31 +82,23 @@ object EventPipeline {
     * does), capped at the configured batch setting (the deployment's
     * parallelism ceiling — a 100 TB landing dir saturates the cap).
     * Checkpoints here are fresh per run, so the partition count may
-    * differ from batch safely. `GRAFT_STREAM_PARTITIONS` still pins an
-    * explicit count; `spark.graft.stream.adaptivePartitions=false`
+    * differ from batch safely. `inputBytes` is the pending input's size
+    * ([[sourceBytes]] of the verb's source). `GRAFT_STREAM_PARTITIONS`
+    * still pins an explicit count; `spark.graft.stream.adaptivePartitions=false`
     * falls back to the fixed 8 (the A/B lever — at gate volumes the
     * two coincide by construction).
     */
-  private def withStreamPartitions[T](spark: SparkSession,
-      inputBytes: Option[Long] = None)(f: => T): T = {
+  private def withStreamPartitions[T](spark: SparkSession, inputBytes: Long)(f: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val old = spark.conf.get(key)
     val target = sys.env.get("GRAFT_STREAM_PARTITIONS").map(_.toInt).getOrElse {
-      val bytes = inputBytes.getOrElse(
-        spark.conf.get("spark.graft.stream.inputBytes", "-1").toLong)
       val adaptive =
         spark.conf.get("spark.graft.stream.adaptivePartitions", "true") == "true"
-      if (adaptive && bytes >= 0)
-        math.min(old.toLong, math.max(8L, bytes / (32L << 20) + 1)).toInt
+      if (adaptive) math.min(old.toLong, math.max(8L, inputBytes / (32L << 20) + 1)).toInt
       else 8
     }
     spark.conf.set(key, math.min(old.toInt, target).toString)
-    try f finally {
-      spark.conf.set(key, old)
-      // one-shot: a verb that forgets to record its volume falls back
-      // to the fixed default instead of inheriting a neighbor's
-      spark.conf.unset("spark.graft.stream.inputBytes")
-    }
+    try f finally spark.conf.set(key, old)
   }
 
   /** Size in bytes of a source file/dir (0 when absent). */
@@ -115,13 +108,9 @@ object EventPipeline {
     if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
   }
 
-  /** Record a lake/table dir's size as the pending stream volume for
-    * [[withStreamPartitions]] (the file-stream sources record theirs
-    * in [[streamSource]]).
-    */
-  private def noteStreamVolume(spark: SparkSession, path: String): Unit =
-    spark.conf.set("spark.graft.stream.inputBytes",
-      sourceBytes(spark, path).toString)
+  /** [[sourceBytes]] of the events table [[eventsStream]] reads. */
+  private def eventBytes(spark: SparkSession, dir: String): Long =
+    sourceBytes(spark, s"$dir/events.parquet")
 
   /** Run `streamed` to completion into a memory sink, return the sink
     * table. AvailableNow processes every pending file then stops —
@@ -140,8 +129,8 @@ object EventPipeline {
     * true) is the kill switch / A/B lever for the opted-in rows.
     */
   private def runToMemory(spark: SparkSession, streamed: DataFrame, name: String,
-      mode: OutputMode, skipNoDataBatch: Boolean = false): DataFrame =
-    withStreamPartitions(spark) {
+      mode: OutputMode, inputBytes: Long, skipNoDataBatch: Boolean = false): DataFrame =
+    withStreamPartitions(spark, inputBytes) {
       val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
       val ndOld = spark.conf.getOption(ndKey)
       val skip = skipNoDataBatch &&
@@ -167,7 +156,7 @@ object EventPipeline {
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("cnt"), round(sum("value"), 2).as("sum_val"))
-    runToMemory(spark, agg, "graft_stream_tumbling", OutputMode.Complete())
+    runToMemory(spark, agg, "graft_stream_tumbling", OutputMode.Complete(), eventBytes(spark, dir))
       .select(col("window.start").cast("timestamp_ntz").as("wstart"),
         col("event_type"), col("cnt"), col("sum_val"))
       .orderBy("wstart", "event_type")
@@ -181,7 +170,7 @@ object EventPipeline {
     val dd = eventsStream(spark, dir)
       .select("user_id", "event_type")
       .dropDuplicates("user_id", "event_type")
-    runToMemory(spark, dd, "graft_stream_dedup", OutputMode.Append())
+    runToMemory(spark, dd, "graft_stream_dedup", OutputMode.Append(), eventBytes(spark, dir))
       .orderBy("user_id", "event_type")
   }
 
@@ -195,7 +184,7 @@ object EventPipeline {
     * check that the checkpoint holds exactly the right state.
     */
   def stateReader(spark: SparkSession, dir: String): DataFrame = withStreamPartitions(
-      spark, Some(sourceBytes(spark, s"$dir/events.parquet"))) {
+      spark, eventBytes(spark, dir)) {
     val ckpt = s"${graft.operators.Lakehouse.scratch}/stream_state_reader_ckpt"
     val p = new org.apache.hadoop.fs.Path(ckpt)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -228,7 +217,7 @@ object EventPipeline {
       .withWatermark("ts", "800 hours")
       .dropDuplicatesWithinWatermark("user_id", "event_type")
       .select("user_id", "event_type")
-    runToMemory(spark, dd, "graft_stream_dedup_wm", OutputMode.Append())
+    runToMemory(spark, dd, "graft_stream_dedup_wm", OutputMode.Append(), eventBytes(spark, dir))
       .orderBy("user_id", "event_type")
   }
 
@@ -248,7 +237,8 @@ object EventPipeline {
           state.update(next)
           Iterator.single(next)
         })
-    val sink = runToMemory(spark, updates.toDF(), "graft_stream_state", OutputMode.Update())
+    val sink = runToMemory(spark, updates.toDF(), "graft_stream_state", OutputMode.Update(),
+      eventBytes(spark, dir))
     // Multiple micro-batches emit one update each; the final state per
     // user is the row with the highest running count.
     val w = org.apache.spark.sql.expressions.Window
@@ -304,7 +294,8 @@ object EventPipeline {
         .groupByKey(_.user_id)
         .transformWithState(new UserStatsProcessor,
           TimeMode.None(), OutputMode.Update(), implicitly[org.apache.spark.sql.Encoder[UserTypes]])
-      val sink = runToMemory(spark, updates.toDF(), "graft_stream_tws", OutputMode.Update())
+      val sink = runToMemory(spark, updates.toDF(), "graft_stream_tws", OutputMode.Update(),
+        eventBytes(spark, dir))
       // one update per user per micro-batch: the final state has max cnt
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("user_id").orderBy(desc("cnt"))
@@ -329,7 +320,7 @@ object EventPipeline {
     val fs = new org.apache.hadoop.fs.Path(lake)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(lake), true)
-    withStreamPartitions(spark, Some(sourceBytes(spark, s"$dir/events.parquet"))) {
+    withStreamPartitions(spark, eventBytes(spark, dir)) {
     val q = eventsStream(spark, dir)
       .select("user_id", "ts", "value")
       .writeStream
@@ -387,7 +378,8 @@ object EventPipeline {
         col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
         col("c_ts") <= col("p_ts"),
       "full_outer")
-    runToMemory(spark, joined, "graft_stream_join_full", OutputMode.Append())
+    runToMemory(spark, joined, "graft_stream_join_full", OutputMode.Append(),
+      eventBytes(spark, dir))
       .groupBy(coalesce(col("p_user"), col("c_user")).as("user_id"))
       .agg(sum(when(col("p_id").isNotNull && col("c_id").isNotNull, 1L).otherwise(0L)).as("n_pairs"),
         sum(when(col("c_id").isNull, 1L).otherwise(0L)).as("n_p_alone"),
@@ -431,7 +423,7 @@ object EventPipeline {
     val outDir = s"${graft.operators.Lakehouse.scratch}/stream_dedup_index_out"
     val outPath = new org.apache.hadoop.fs.Path(outDir)
     outPath.getFileSystem(conf).delete(outPath, true)
-    withStreamPartitions(spark) {
+    withStreamPartitions(spark, sourceBytes(spark, src.toString)) {
       val q = spark.readStream.schema(raw).parquet(ingest)
         .where(col("doc_id") % 10 === 0)
         .writeStream
@@ -488,7 +480,7 @@ object EventPipeline {
         col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
         col("c_ts") <= col("p_ts"))
     runToMemory(spark, joined, "graft_stream_join", OutputMode.Append(),
-      skipNoDataBatch = true)
+      eventBytes(spark, dir), skipNoDataBatch = true)
       .groupBy(col("p_user").as("user_id"))
       .agg(count(lit(1)).as("n_pairs"), countDistinct(col("p_id")).as("n_purchases"))
       .orderBy("user_id")
@@ -525,7 +517,8 @@ object EventPipeline {
         col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
         col("c_ts") <= col("p_ts"),
       "left_outer")
-    runToMemory(spark, joined, "graft_stream_join_left", OutputMode.Append())
+    runToMemory(spark, joined, "graft_stream_join_left", OutputMode.Append(),
+      eventBytes(spark, dir))
       .groupBy(col("p_user").as("user_id"))
       .agg(count(col("c_id")).as("n_pairs"),
         sum(when(col("c_id").isNull, 1L).otherwise(0L)).as("n_unmatched"))
@@ -546,7 +539,8 @@ object EventPipeline {
       .join(broadcast(dim), Seq("user_id"))
       .groupBy("c_mktsegment")
       .agg(count(lit(1)).as("cnt"), round(sum("value"), 2).as("sum_val"))
-    runToMemory(spark, enriched, "graft_stream_enrich", OutputMode.Complete())
+    runToMemory(spark, enriched, "graft_stream_enrich", OutputMode.Complete(),
+      eventBytes(spark, dir))
       .orderBy("c_mktsegment")
   }
 
@@ -585,7 +579,8 @@ object EventPipeline {
         ev("user_id") === dimv("k") && col("vf") <= col("ts"))
       .groupBy(col("event_id"), col("ts"))
       .agg(max_by(col("seg"), col("vf")).as("seg"))
-    runToMemory(spark, asOf, "graft_stream_temporal", OutputMode.Complete())
+    runToMemory(spark, asOf, "graft_stream_temporal", OutputMode.Complete(),
+      eventBytes(spark, dir))
       .select("event_id", "seg")
       .orderBy("event_id")
   }
@@ -616,11 +611,11 @@ object EventPipeline {
 
   def lakeStream(spark: SparkSession, dir: String): DataFrame = {
     val lake = s"${graft.operators.Lakehouse.scratch}/stream_lake_orders"
-    noteStreamVolume(spark, lake)
     val agg = graft.sources.LakeTable.streamAppends(spark, lake)
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("cnt"), round(sum("o_totalprice") + lit(1e-6), 2).as("rev"))
-    runToMemory(spark, agg, "graft_stream_lake", OutputMode.Complete())
+    runToMemory(spark, agg, "graft_stream_lake", OutputMode.Complete(),
+      sourceBytes(spark, lake))
       .orderBy("o_orderpriority")
   }
 
@@ -641,7 +636,7 @@ object EventPipeline {
       graft.Tables(spark, dir, "events")
         .select("event_id", "user_id", "value").limit(0))
     def runOnce(): Unit = withStreamPartitions(
-        spark, Some(sourceBytes(spark, s"$dir/events.parquet"))) {
+        spark, eventBytes(spark, dir)) {
       val q = eventsStream(spark, dir)
         .select("event_id", "user_id", "value")
         .writeStream
@@ -677,7 +672,7 @@ object EventPipeline {
       val hp = new org.apache.hadoop.fs.Path(p)
       hp.getFileSystem(conf).delete(hp, true)
     }
-    withStreamPartitions(spark, Some(sourceBytes(spark, s"$dir/events.parquet"))) {
+    withStreamPartitions(spark, eventBytes(spark, dir)) {
       val q = eventsStream(spark, dir)
         .select("event_id", "user_id", "value")
         .writeStream.format("graft")
@@ -713,11 +708,11 @@ object EventPipeline {
 
   def lakeStreamV2(spark: SparkSession, dir: String): DataFrame = {
     val lake = s"${graft.operators.Lakehouse.scratch}/stream_lake_v2_orders"
-    noteStreamVolume(spark, lake)
     val agg = spark.readStream.format("graft").load(lake)
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("cnt"), round(sum("o_totalprice") + lit(1e-6), 2).as("rev"))
-    runToMemory(spark, agg, "graft_stream_lake_v2", OutputMode.Complete())
+    runToMemory(spark, agg, "graft_stream_lake_v2", OutputMode.Complete(),
+      sourceBytes(spark, lake))
       .orderBy("o_orderpriority")
   }
 
@@ -752,14 +747,14 @@ object EventPipeline {
 
   def cdcStream(spark: SparkSession, dir: String): DataFrame = {
     val lake = s"${graft.operators.Lakehouse.scratch}/stream_cdc_orders"
-    noteStreamVolume(spark, lake)
     val sign = when(col("change_type").isin("insert", "update_postimage"), 1).otherwise(-1)
     val agg = spark.readStream.format("graft")
       .option("readChangeFeed", "true").load(lake)
       .groupBy("o_orderpriority")
       .agg(sum(sign).cast("long").as("cnt"),
         round(sum(sign * col("o_totalprice")) + lit(1e-6), 2).as("rev"))
-    runToMemory(spark, agg, "graft_stream_cdc", OutputMode.Complete())
+    runToMemory(spark, agg, "graft_stream_cdc", OutputMode.Complete(),
+      sourceBytes(spark, lake))
       .where(col("cnt") > 0) // fully-deleted groups net to zero and drop out
       .orderBy("o_orderpriority")
   }
@@ -855,7 +850,7 @@ object EventPipeline {
         .withWatermark("ts", "1 hour")
         .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
         .agg(count(lit(1)).as("n_events"), round(sum("value"), 2).as("sum_val"))
-      runToMemory(s, agg, "graft_stream_session", OutputMode.Complete())
+      runToMemory(s, agg, "graft_stream_session", OutputMode.Complete(), eventBytes(s, d))
         .select(col("user_id"),
           col("session_window.start").cast("timestamp_ntz").as("session_start"),
           col("n_events"), col("sum_val"))

@@ -23,10 +23,13 @@ object Glue {
     * RocksDB caches) loaded until maintenance lazily evicts them —
     * accumulated across a 240-query bench they inflate later stream
     * rows' measurements with other queries' state. `StateStore` is
-    * private[sql], hence this shim.
+    * private[sql], hence this shim. `unloadAll`, not `stop`: `stop`
+    * also waits for the maintenance pool while holding the provider
+    * map's lock, which a running maintenance task is waiting for — a
+    * deadlock that hangs the caller for good.
     */
   def unloadStateStores(): Unit =
-    org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+    org.apache.spark.sql.execution.streaming.state.StateStore.unloadAll()
 
   /** Connector literal over a Catalyst-internal value (UTF8String,
     * Int, …) — the shape BatchScanExec hands to runtime-filterable
@@ -35,6 +38,12 @@ object Glue {
   def connectorLiteral(v: Any, dt: org.apache.spark.sql.types.DataType)
       : org.apache.spark.sql.connector.expressions.Expression =
     org.apache.spark.sql.connector.expressions.LiteralValue(v, dt)
+
+  /** A V1 source filter as its V2 predicate (`Filter.toV2` is
+    * private[sql], hence this shim).
+    */
+  def toV2(f: org.apache.spark.sql.sources.Filter)
+      : org.apache.spark.sql.connector.expressions.filter.Predicate = f.toV2
 
   /** Wrap a LogicalPlan into a DataFrame (classic Dataset.ofRows). */
   def ofRows(spark: org.apache.spark.sql.SparkSession,

@@ -84,6 +84,34 @@ class ColumnRenameSpec extends AnyFunSuite {
     assert(files.exists(_.kept))
   }
 
+  test("readRange and readPoint serve logical columns after rename and drop, flat and partitioned") {
+    import sources.LakeTable
+    Seq(Nil, Seq("g")).foreach { parts =>
+      val p = freshPath(s"ranged_${parts.size}")
+      LakeTable.create(spark, p, spark.range(0, 40).selectExpr("id AS k", "id * 10 AS amount",
+        "CAST(id % 3 AS STRING) AS tag", "CAST(id % 2 AS STRING) AS g"), partitionBy = parts)
+      def agrees(): Unit = {
+        val full = LakeTable.read(spark, p)
+        def same(got: org.apache.spark.sql.DataFrame, want: org.apache.spark.sql.DataFrame) = {
+          assert(got.columns.toSeq === want.columns.toSeq, parts)
+          assert(got.collect().toSet === want.collect().toSet, parts)
+        }
+        same(LakeTable.readRange(spark, p, "key", 5L, 12L), full.where(col("key").between(5L, 12L)))
+        same(LakeTable.readRange(spark, p, "amount", 100L, 150L),
+          full.where(col("amount").between(100L, 150L)))
+        Seq(7L, 40L).foreach { k =>
+          same(LakeTable.readPoint(spark, p, "key", k), full.where(col("key") === k))
+        }
+      }
+      LakeTable.renameColumn(spark, p, "k", "key")
+      LakeTable.append(spark, p, Seq((40L, 400L, "x", "0")).toDF("key", "amount", "tag", "g"))
+      agrees()
+      LakeTable.dropColumn(spark, p, "tag")
+      assert(!LakeTable.readPoint(spark, p, "key", 7L).columns.contains("tag"))
+      agrees()
+    }
+  }
+
   test("SQL ALTER TABLE RENAME COLUMN end-to-end through the catalog") {
     val cat = "ren_cat"
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")

@@ -744,6 +744,84 @@ class LakeTableSpec extends AnyFunSuite {
     assert(LakeTable.read(spark, p).count() === 4010)
   }
 
+  test("readPoint and readRange apply deletion vectors on flat and partitioned tables") {
+    Seq(Nil, Seq("g")).foreach { parts =>
+      val p = s"$root/point_dv_${parts.size}"
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(p))
+      LakeTable.create(spark, p, spark.range(0, 40).selectExpr("id AS k",
+        "CAST(id % 4 AS STRING) AS g", "CAST(id AS DOUBLE) AS x", "concat('s', id % 3) AS s"),
+        partitionBy = parts)
+      LakeTable.deleteMor(spark, p, col("k") === 7L)
+      LakeTable.updateMor(spark, p, col("k") === 9L, Map("x" -> lit(-1.0)))
+      val full = LakeTable.read(spark, p)
+      Seq(7L, 9L, 10L).foreach { k =>
+        val got = LakeTable.readPoint(spark, p, "k", k)
+        assert(got.columns.toSeq === full.columns.toSeq, parts)
+        assert(got.collect().toSet === full.where(col("k") === k).collect().toSet, (parts, k))
+      }
+      assert(LakeTable.readPoint(spark, p, "k", 7L).count() === 0)
+      assert(LakeTable.readPoint(spark, p, "k", 9L).select("x").as[Double].collect().toSeq === Seq(-1.0))
+      assert(LakeTable.readRange(spark, p, "k", 5L, 12L).collect().toSet ===
+        full.where(col("k").between(5L, 12L)).collect().toSet, parts)
+      // string predicates still push into the vector-applying catalog scan
+      val str = spark.read.format("graft").load(p)
+        .where(col("s").startsWith("s") && col("s").endsWith("1") && col("s").contains("1"))
+      val plan = str.queryExecution.executedPlan.toString
+      Seq("GraftDvScan", "StringStartsWith(s,s)", "StringEndsWith(s,1)", "StringContains(s,1)")
+        .foreach(f => assert(plan.contains(f), plan))
+      assert(str.count() === full.where(col("s") === "s1").count())
+      // the bloom tier leaves partition-column lookups to the partition
+      // value: a STRING partition "1" is inferred as int in the bloom
+      LakeTable.buildBlooms(spark, p, Seq("k", "g"))
+      assert(LakeTable.readPoint(spark, p, "g", "1").collect().toSet ===
+        full.where(col("g") === "1").collect().toSet, parts)
+      assert(LakeTable.readPoint(spark, p, "k", 10L).collect().toSet ===
+        full.where(col("k") === 10L).collect().toSet, parts)
+    }
+  }
+
+  test("bounds never follow a cast that changes units or rounds: reads and deletes match a plain filter") {
+    val p = s"$root/cast_bounds"
+    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(p))
+    val rows = spark.range(0, 20).selectExpr("id AS k",
+      "timestamp_seconds(1699999990 + id) AS ts", "DATE '2023-11-14' AS d")
+    LakeTable.create(spark, p, rows)
+    // epoch seconds against the microsecond stats of ts, and
+    // microseconds against the day stats of d
+    val secs = expr("CAST(ts AS BIGINT) <= 1700000000")
+    val days = expr("CAST(d AS TIMESTAMP) >= TIMESTAMP '2023-11-14 00:00:00'")
+    def sql = spark.read.format("graft").load(p)
+    assert(rows.where(secs).count() === 11 && rows.where(days).count() === 20)
+    Seq(secs, days).foreach(f => assert(sql.where(f).count() === rows.where(f).count(), f))
+    LakeTable.deleteMor(spark, p, col("k") === 19L) // SQL now serves through the vector scan
+    Seq(secs, days).foreach(f =>
+      assert(sql.where(f).count() === rows.where(f && col("k") =!= 19L).count(), f))
+    LakeTable.delete(spark, p, days && secs)
+    assert(LakeTable.read(spark, p).count() === 20 - 11 - 1)
+    // long -> double rounds 2^53 + 1 down to 2^53: the row matches
+    val big = s"$root/cast_bounds_big"
+    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(big))
+    LakeTable.create(spark, big, Seq(9007199254740993L).toDF("k"))
+    val rounded = col("k").cast("double") === lit(9007199254740992.0)
+    assert(spark.read.format("graft").load(big).where(rounded).count() === 1)
+    LakeTable.delete(spark, big, rounded)
+    assert(LakeTable.read(spark, big).count() === 0)
+  }
+
+  test("IN-list bounds stay exact above 2^53: a DELETE never prunes the matching group") {
+    val p = s"$root/in_exact"
+    Seq(p, s"$p-sql").foreach(d => org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(d)))
+    LakeTable.create(spark, p, Seq(9007199254740993L).toDF("k"))
+    LakeTable.create(spark, s"$p-sql", Seq(9007199254740993L).toDF("k"))
+    // through a Double both literals round to 2^53 and the group's
+    // [min, max] = [2^53 + 1, 2^53 + 1] looks disjoint from them
+    LakeTable.delete(spark, p, col("k").isin(9007199254740993L, 9007199254740991L))
+    assert(LakeTable.read(spark, p).count() === 0)
+    // the same miner serves the catalog scan's file skipping
+    assert(spark.read.format("graft").load(s"$p-sql")
+      .where(col("k").isin(9007199254740993L, 9007199254740991L)).count() === 1)
+  }
+
   test("deletion vectors: MOR delete rewrites nothing; reads, time travel, SQL, compact, vacuum agree") {
     val p = s"$root/mor"
     org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(p))

@@ -182,6 +182,25 @@ class StreamingSpec extends AnyFunSuite {
     assert(raw.select("partition_id").distinct().count() > 1)
   }
 
+  test("a single-file stream source whose path holds glob metacharacters reads exactly that file") {
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    val dir = new Path(s"${graft.operators.Lakehouse.scratch}/glob[1]{a,b}")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(dir, true)
+    val events = new Path(s"$sf/events.parquet")
+    val src = new Path(dir, "ev[1]{x}.parquet")
+    // `ev1x.parquet` is what the unescaped pattern would match instead
+    Seq(src, new Path(dir, "ev1x.parquet")).foreach { to =>
+      FileUtil.copy(fs, events, fs, to, false, spark.sparkContext.hadoopConfiguration)
+    }
+    val q = spark.readStream.schema(spark.read.parquet(events.toString).schema)
+      .parquet(EventPipeline.streamSource(spark, src))
+      .writeStream.format("memory").queryName("glob_spec")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    try q.awaitTermination() finally q.stop()
+    assert(spark.table("glob_spec").count() === spark.read.parquet(events.toString).count())
+  }
+
   test("registry streaming queries match their batch equivalents") {
     val streamRes = EventPipeline.tumbling(spark, sf).collect()
     val batchRes = Registry.byName("q_events_tumbling").run(spark, sf)
